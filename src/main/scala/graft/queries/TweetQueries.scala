@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Engine, Tables}
 import graft.emoji.EmojiOps
+import graft.sources.CorpusCache
 
 /** The reference's seven questions at full semantic fidelity, over an
   * A.1-shaped NDJSON tweet corpus (FIXTURES.md §A — committed, deterministic,
@@ -11,7 +12,9 @@ import graft.emoji.EmojiOps
   * missing fields). This module is the true reference-parity surface:
   *
   *  - S1: `spark.read.json` directory batch scan with schema inference
-  *    (reference q1/Runner.scala:93).
+  *    (reference q1/Runner.scala:93), parsed once per session and
+  *    directory-listing version and reused from Spark's in-memory columnar
+  *    cache ([[graft.sources.CorpusCache]]).
   *  - S2/S3: static-then-stream schema bootstrap + JSON file-stream source
   *    (q2/Runner.scala:95-97) — [[streamTopEmoji]].
   *  - P1/P2: nested-field and array-of-struct path projection
@@ -30,8 +33,11 @@ import graft.emoji.EmojiOps
   *
   * Scale: identical shape to the §2.9 normal form — scan → narrow
   * projections/generators → one hash-aggregate shuffle → sort of the small
-  * aggregated side. JSON scans at 100 TB benefit from Spark's nested-schema
-  * pruning (only `data.text` + the dimension path are parsed).
+  * aggregated side. The reference re-parses the corpus for every question;
+  * here every batch question over an unchanged corpus scans the cached
+  * columnar relation, so the JSON parse and schema inference run once per
+  * listing version. An added, removed or rewritten file invalidates the
+  * cache and the next call parses the corpus again.
   */
 object TweetQueries {
 
@@ -40,6 +46,10 @@ object TweetQueries {
   val FixtureDir = "/root/repo/fixtures/tweets"
 
   private val fixtureGlob = s"$FixtureDir/*.json"
+
+  /** The committed fixtures root; the q7 historical corpora sit beside
+    * `tweets/` under it. */
+  private val FixturesRoot = new java.io.File(FixtureDir).getParent
 
   /** DuckDB-side scan of the same NDJSON files. */
   private val tweetsSql =
@@ -66,14 +76,18 @@ object TweetQueries {
   private val WordNoiseSpec = EmojiOps.WordNoiseSpec
   private val WordValidSpec = EmojiOps.WordValidSpec
 
-  private def tweets(spark: SparkSession, dir: String): DataFrame = {
+  /** The parsed corpus at `path`, from the session's corpus cache. */
+  private def corpus(spark: SparkSession, path: String): DataFrame = {
     Engine.tune(spark)
-    spark.read.json(tweetsDir(dir))
+    CorpusCache.json(spark, path)
   }
 
+  private def tweets(spark: SparkSession, dir: String): DataFrame =
+    corpus(spark, tweetsDir(dir))
+
   /** text → exploded individual emoji code points (T1–T3+F2 in one pass). */
-  private def emojiRows(spark: SparkSession, dir: String): DataFrame =
-    tweets(spark, dir)
+  private def emojiRows(tweets: DataFrame): DataFrame =
+    tweets
       .select(col("data.text").as("text"))
       .filter(col("text").isNotNull && col("text").rlike(EmojiOps.EmojiClass))
       .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
@@ -85,11 +99,14 @@ object TweetQueries {
   // ---- q1 family: most / least / parameterized emoji (q1:93-113,142-162,191-205)
 
   def topEmoji(spark: SparkSession, dir: String): DataFrame =
-    emojiRows(spark, dir).groupBy("emoji").agg(count(lit(1)).as("cnt"))
+    topEmojiOf(tweets(spark, dir))
+
+  private def topEmojiOf(tweets: DataFrame): DataFrame =
+    emojiRows(tweets).groupBy("emoji").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("emoji"))
 
   def leastEmoji(spark: SparkSession, dir: String): DataFrame =
-    emojiRows(spark, dir).groupBy("emoji").agg(count(lit(1)).as("cnt"))
+    emojiRows(tweets(spark, dir)).groupBy("emoji").agg(count(lit(1)).as("cnt"))
       .orderBy(asc("cnt"), asc("emoji"))
 
   /** Quirk-parity census (reference q1:104-109 VERBATIM semantics, as
@@ -152,21 +169,13 @@ object TweetQueries {
   /** The strict census at bench scale: same plan as [[topEmoji]], over the
     * deterministic 100k-tweet generated corpus (TweetCorpus) — the entry
     * that actually measures the tokenizer instead of session overhead. */
-  def topEmojiScaled(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
-    val corpus = graft.ingest.TweetCorpus.ensureScaled()
-    spark.read.json(corpus)
-      .select(col("data.text").as("text"))
-      .filter(col("text").isNotNull && col("text").rlike(EmojiOps.EmojiClass))
-      .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
-      .groupBy("emoji").agg(count(lit(1)).as("cnt"))
-      .orderBy(desc("cnt"), asc("emoji"))
-  }
+  def topEmojiScaled(spark: SparkSession, dir: String): DataFrame =
+    topEmojiOf(corpus(spark, graft.ingest.TweetCorpus.ensureScaled()))
 
   /** F3: the user-supplied regex reaches the filter as a parameter
     * (q1:204 `rlike userEmoji`); registered twice with different params. */
   def specificEmoji(pattern: String)(spark: SparkSession, dir: String): DataFrame =
-    emojiRows(spark, dir).filter(col("emoji").rlike(pattern))
+    emojiRows(tweets(spark, dir)).filter(col("emoji").rlike(pattern))
       .groupBy("emoji").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("emoji"))
 
@@ -246,20 +255,18 @@ object TweetQueries {
   //      census is empty — the reference's own documented finding
   //      (pptx slide 19) reproduced as a verifiable result.
 
-  def histTopEmoji(subdir: String, textCol: String)(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
-    spark.read.json(s"/root/repo/fixtures/$subdir")
+  def histTopEmoji(subdir: String, textCol: String)(spark: SparkSession, dir: String): DataFrame =
+    corpus(spark, s"$FixturesRoot/$subdir")
       .select(col(textCol).as("text"))
       .filter(col("text").isNotNull)
       .select(explode(EmojiOps.extractEmojis(col("text"))).as("emoji"))
       .groupBy("emoji").agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("emoji"))
-  }
 
   private def histSql(subdir: String, textCol: String): String =
     s"""SELECT emoji, count(*) AS cnt FROM (
        |  SELECT unnest(regexp_extract_all($textCol, '$EmojiClassSql')) AS emoji
-       |  FROM read_json_auto('/root/repo/fixtures/$subdir/*.json', format='newline_delimited'))
+       |  FROM read_json_auto('$FixturesRoot/$subdir/*.json', format='newline_delimited'))
        |GROUP BY emoji ORDER BY cnt DESC, emoji""".stripMargin
 
   // ---- q2 analog: the same top-emoji aggregation through Structured
@@ -267,10 +274,9 @@ object TweetQueries {
   //      sort-on-streaming-aggregate, memory sink standing in for console).
 
   def streamTopEmoji(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
-    val corpus = tweetsDir(dir)
-    val static = spark.read.json(corpus)                     // S3 schema bootstrap
-    val stream = spark.readStream.schema(static.schema).json(corpus)
+    val path = tweetsDir(dir)
+    val static = corpus(spark, path)                         // S3 schema bootstrap
+    val stream = spark.readStream.schema(static.schema).json(path)
     val agg = stream
       .select(col("data.text").as("text"))
       .filter(col("text").isNotNull && col("text").rlike(EmojiOps.EmojiClass))
@@ -287,10 +293,9 @@ object TweetQueries {
     * hash-gated against the identical oracle as `tw_q1_top_emoji_quirk`
     * (streaming/batch duality of the quirk census). */
   def streamTopEmojiQuirk(spark: SparkSession, dir: String): DataFrame = {
-    Engine.tune(spark)
-    val corpus = tweetsDir(dir)
-    val static = spark.read.json(corpus)                     // S3 schema bootstrap
-    val stream = spark.readStream.schema(static.schema).json(corpus)
+    val path = tweetsDir(dir)
+    val static = corpus(spark, path)                         // S3 schema bootstrap
+    val stream = spark.readStream.schema(static.schema).json(path)
     val agg = stream
       .select(col("data.text").as("text"))
       .filter(col("text").isNotNull)
